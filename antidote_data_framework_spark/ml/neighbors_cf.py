@@ -115,7 +115,11 @@ def _pair_agg(
     nondeterminism every shuffle already has)."""
     if packable:
         packed = joined.select(
-            F.shiftleft(i_col, 32).bitwiseOR(j_col).alias("k"),
+            # Both ids as long: on an INT column shiftleft masks the
+            # count mod 32, so the shift by 32 would be a no-op.
+            F.shiftleft(i_col.cast("long"), 32)
+            .bitwiseOR(j_col.cast("long"))
+            .alias("k"),
             term.alias("t"),
         )
         agg = (

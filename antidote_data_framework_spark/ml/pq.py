@@ -39,6 +39,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ..functions.frames import local_frame
 from ..registry import spark_query
 from ..sources import load_table
 
@@ -187,7 +188,8 @@ def q_pq_adc_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     if train is not sliced:
         train.unpersist()
     sliced.unpersist()
-    return spark.createDataFrame(
+    return local_frame(
+        spark,
         rows,
         "vec_id BIGINT, label INT, adc_dist DOUBLE, code_bytes INT, float_bytes INT",
     )
@@ -332,6 +334,6 @@ def q_ivfpq_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     rows = out.collect()
     sliced.unpersist()
     emb.unpersist()
-    return spark.createDataFrame(
-        rows, "vec_id BIGINT, label INT, adc_dist DOUBLE, code_bytes INT"
+    return local_frame(
+        spark, rows, "vec_id BIGINT, label INT, adc_dist DOUBLE, code_bytes INT"
     )

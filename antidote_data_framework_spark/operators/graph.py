@@ -194,7 +194,10 @@ def _build_pair_counts(li: DataFrame) -> DataFrame:
                 parts_arr,
                 lambda a: F.transform(
                     F.filter(parts_arr, lambda b: a != b),
-                    lambda b: F.shiftleft(a, 32).bitwiseOR(b),
+                    # long first: an INT shift by 32 is a no-op
+                    lambda b: F.shiftleft(a.cast("long"), 32).bitwiseOR(
+                        b.cast("long")
+                    ),
                 ),
             )
         )

@@ -8,6 +8,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ..functions.frames import local_frame
 from ..registry import spark_query
 from ..sources import load_table, register_views
 
@@ -134,7 +135,8 @@ def q_skew_salted_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     li = load_table(spark, sf_dir, "lineitem").withColumn(
         "salt", (F.col("l_orderkey") % SALT).cast("int")
     )
-    flags = spark.createDataFrame(
+    flags = local_frame(
+        spark,
         [("A", "accepted"), ("N", "none"), ("R", "returned")],
         "flag_code STRING, flag_desc STRING",
     ).withColumn("salt", F.explode(F.array(*[F.lit(i) for i in range(SALT)])))

@@ -15,6 +15,7 @@ import shutil
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ..functions.frames import local_frame
 from ..functions.hints import broadcast_small as bcast
 
 from ..registry import spark_query
@@ -102,8 +103,8 @@ def q_source_csv_json_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     with ThreadPoolExecutor(max_workers=2) as pool:
         f_csv, f_json = pool.submit(_csv_leg), pool.submit(_json_leg)
         n_csv, n_json = f_csv.result(), f_json.result()
-    return spark.createDataFrame(
-        [(int(n_csv), int(n_json))], "n_csv BIGINT, n_json BIGINT"
+    return local_frame(
+        spark, [(int(n_csv), int(n_json))], "n_csv BIGINT, n_json BIGINT"
     )
 
 
@@ -448,6 +449,10 @@ def q_dpp_partition_pruned_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     # The dim filter must be a comparison predicate: Spark's DPP rule
     # gates on isLikelySelective(), which accepts EqualTo/In/Like but
     # NOT a bare boolean attribute — a real integration subtlety.
+    # The dim stays a list-built (RDD) relation, not a local_frame:
+    # as a LocalRelation, ConvertToLocalRelation folds the urgency
+    # filter into the rows at optimisation time, which leaves DPP no
+    # filtered build side, so the partition filter is never injected.
     dim = spark.createDataFrame(
         [
             ("1-URGENT", "urgent"),
@@ -608,8 +613,8 @@ def q_sink_codec_tradeoff(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     with ThreadPoolExecutor(max_workers=3) as pool:
         out_rows = list(pool.map(_one, ("none", "snappy", "zstd")))
-    return spark.createDataFrame(
-        out_rows, "codec STRING, n_files INT, n_rows BIGINT, n_bytes BIGINT"
+    return local_frame(
+        spark, out_rows, "codec STRING, n_files INT, n_rows BIGINT, n_bytes BIGINT"
     )
 
 

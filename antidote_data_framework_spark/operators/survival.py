@@ -35,6 +35,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from ..functions.frames import local_frame
 from ..functions.hints import broadcast_small as bcast
 
 from ..registry import spark_query
@@ -336,7 +337,8 @@ def q_markov_attribution(spark: SparkSession, sf_dir: str) -> DataFrame:
                 round((base_p - removed_p) / base_p, 4),
             )
         )
-    return spark.createDataFrame(
+    return local_frame(
+        spark,
         out,
         "channel STRING, conv_base DOUBLE, conv_removed DOUBLE, removal_effect DOUBLE",
     )

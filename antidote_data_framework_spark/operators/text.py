@@ -12,6 +12,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from ..functions.frames import local_frame
 from ..functions.hints import broadcast_small as bcast
 from ..registry import spark_query
 from ..sources import load_table
@@ -368,8 +369,8 @@ def q_dedup_threshold_curve(spark: SparkSession, sf_dir: str) -> DataFrame:
     lens = docs.select(
         "doc_id", F.size(F.split("text", " ")).cast("bigint").alias("n_tokens")
     )
-    thresholds = spark.createDataFrame(
-        [(t,) for t in DEDUP_CURVE_THRESHOLDS], "threshold double"
+    thresholds = local_frame(
+        spark, [(t,) for t in DEDUP_CURVE_THRESHOLDS], "threshold double"
     )
     removed = maxj.join(
         bcast(thresholds, "5-row literal threshold table"),

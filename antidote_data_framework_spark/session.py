@@ -11,6 +11,14 @@ Local-mode defaults that still encode the cluster posture:
   multimodal UDFs) crosses the Python boundary in columnar batches.
 - Session timezone pinned to UTC so timestamp semantics are identical
   to the DuckDB oracle and independent of host TZ.
+- DataFrame debugging off (``spark.python.sql.dataFrameDebugging.enabled``,
+  a constant).  With it on, PySpark wraps every Column call so that it
+  looks up the active session, reads a conf, walks the Python stack,
+  tries ``import ipykernel`` and sets and clears the call-site origin
+  in the JVM over py4j.  One cold q_antidote_loop (sf0.01, 4 cores)
+  made 11,939 driver->JVM py4j calls with it on and 3,558 with it off.
+  What is lost is the Python file:line in DataFrame error contexts,
+  which no query or test reads.
 """
 
 from __future__ import annotations
@@ -57,6 +65,8 @@ def get_spark(app_name: str = "antidote_data_framework_spark") -> SparkSession:
         .config("spark.sql.adaptive.skewJoin.enabled", "true")
         .config("spark.sql.session.timeZone", "UTC")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
+        # Column calls skip the call-site capture (module docstring).
+        .config("spark.python.sql.dataFrameDebugging.enabled", "false")
         .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "16g"))
         # Row-proportional demo results (per-row projections like
         # q_scalar_math_cond) exceed the 1g default when collected at

@@ -118,20 +118,23 @@ def test_pair_build_bounded_on_giant_orders(spark):
 
 def test_pair_build_fast_path_matches_window_path(spark):
     """On under-cap inputs (every fixture) the two paths are the same
-    multiset too — the fast path is what the committed hashes ride."""
+    multiset too — the fast path is what the committed hashes ride.
+    INT part ids too: the packed key must widen before the 32-bit
+    shift, which Spark masks mod 32 on an INT."""
     from antidote_data_framework_spark.operators.graph import _build_pair_counts
 
     rows = [(1, 10, 1), (1, 20, 2), (1, 30, 3), (2, 10, 1), (2, 20, 2)]
-    li = spark.createDataFrame(
-        rows, "l_orderkey BIGINT, l_partkey BIGINT, l_linenumber INT"
-    )
-    got = sorted(
-        (r["src"], r["dst"], r["w"]) for r in _build_pair_counts(li).collect()
-    )
-    assert got == [
-        (10, 20, 2), (10, 30, 1), (20, 10, 2), (20, 30, 1),
-        (30, 10, 1), (30, 20, 1),
-    ]
+    for id_type in ("BIGINT", "INT"):
+        li = spark.createDataFrame(
+            rows, f"l_orderkey BIGINT, l_partkey {id_type}, l_linenumber INT"
+        )
+        got = sorted(
+            (r["src"], r["dst"], r["w"]) for r in _build_pair_counts(li).collect()
+        )
+        assert got == [
+            (10, 20, 2), (10, 30, 1), (20, 10, 2), (20, 30, 1),
+            (30, 10, 1), (30, 20, 1),
+        ], id_type
 
 
 def test_pair_build_unpackable_ids_fall_back(spark):

@@ -19,7 +19,7 @@ from antidote_data_framework_spark.ml.neighbors_cf import (
 )
 
 
-def _cells(spark):
+def _cells(spark, id_type="long"):
     # 4 users x overlapping items: pairs (1,2) co=4, (1,3) co=3,
     # (2,3) co=3, plus a below-floor pair (3,9) co=1
     rows = []
@@ -28,7 +28,9 @@ def _cells(spark):
         if u < 3:
             rows.append((u, 3, 4.0))
     rows.append((3, 9, 5.0))
-    return spark.createDataFrame(rows, "user_id long, item_id long, r double")
+    return spark.createDataFrame(
+        rows, f"user_id {id_type}, item_id {id_type}, r double"
+    )
 
 
 def _join(cells):
@@ -41,20 +43,25 @@ def _join(cells):
 
 
 def test_packed_equals_plain_key_path(spark):
-    cells = _cells(spark)
-    args = (F.col("a.item_id"), F.col("b.item_id"), F.col("a.r") * F.col("b.r"), "dot")
-    packed = {
-        (r["item_i"], r["item_j"]): (r["dot"], r["co"])
-        for r in _pair_agg(_join(cells), *args, packable=True).collect()
-    }
-    plain = {
-        (r["item_i"], r["item_j"]): (r["dot"], r["co"])
-        for r in _pair_agg(_join(cells), *args, packable=False).collect()
-    }
-    assert packed == plain
-    assert (1, 2) in packed and packed[(1, 2)][1] == 4
-    assert all(co >= MIN_CO for _d, co in packed.values())
-    assert (3, 9) not in packed  # MIN_CO floor applied on both paths
+    # INT ids too: shiftleft on an INT masks the count mod 32, so an
+    # unwidened pack would collapse (1,2), (1,3) and (2,3) into key 3.
+    for id_type in ("long", "int"):
+        cells = _cells(spark, id_type)
+        args = (
+            F.col("a.item_id"), F.col("b.item_id"), F.col("a.r") * F.col("b.r"), "dot"
+        )
+        packed = {
+            (r["item_i"], r["item_j"]): (r["dot"], r["co"])
+            for r in _pair_agg(_join(cells), *args, packable=True).collect()
+        }
+        plain = {
+            (r["item_i"], r["item_j"]): (r["dot"], r["co"])
+            for r in _pair_agg(_join(cells), *args, packable=False).collect()
+        }
+        assert packed == plain, id_type
+        assert (1, 2) in packed and packed[(1, 2)][1] == 4
+        assert all(co >= MIN_CO for _d, co in packed.values())
+        assert (3, 9) not in packed  # MIN_CO floor applied on both paths
 
 
 def test_pack_bijective_at_range_edges(spark):

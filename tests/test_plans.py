@@ -170,6 +170,50 @@ def test_no_forced_broadcast_of_sf_proportional_tables():
         )
 
 
+def test_driver_built_frames_go_through_local_frame():
+    """Every driver-built DataFrame is an Arrow local relation
+    (functions/frames.local_frame).  The list path plans as
+    ExistingRDD and starts a Python-worker task per slice on every
+    read, so raw ``createDataFrame(`` may appear only in frames.py and
+    at the DPP dim in q_dpp_partition_pruned_join, which must stay an
+    opaque relation and says why in a comment right above it."""
+    import pathlib
+    import re
+
+    pkg = pathlib.Path(__file__).resolve().parent.parent / "antidote_data_framework_spark"
+    bad: list[str] = []
+    exempt: list[str] = []
+    for py in sorted(pkg.rglob("*.py")):
+        if py.relative_to(pkg).as_posix() == "functions/frames.py":
+            continue
+        lines = py.read_text().splitlines()
+        for i, line in enumerate(lines):
+            if "createDataFrame(" not in line:
+                continue
+            func = next(
+                (m.group(1) for l in reversed(lines[:i])
+                 if (m := re.match(r"def (\w+)", l))),
+                None,
+            )
+            comment = " ".join(
+                l.strip() for l in lines[max(0, i - 6):i] if l.strip().startswith("#")
+            )
+            site = f"{py.relative_to(pkg)}:{i + 1}: {line.strip()}"
+            if (
+                py.relative_to(pkg).as_posix() == "operators/scans.py"
+                and func == "q_dpp_partition_pruned_join"
+                and "ConvertToLocalRelation" in comment
+            ):
+                exempt.append(site)
+            else:
+                bad.append(site)
+    assert not bad, (
+        "raw createDataFrame outside functions/frames.py — use "
+        "local_frame(spark, rows, ddl):\n" + "\n".join(bad)
+    )
+    assert len(exempt) == 1, exempt
+
+
 def test_q22_anti_join_and_scalar_broadcast(spark, sf_dir):
     """NOT EXISTS plans as LeftAnti; the global-average scalar arrives
     via a broadcast, not a shuffle."""
