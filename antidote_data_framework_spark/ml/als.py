@@ -202,10 +202,26 @@ def q_als_recommend_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
 # 1.38 s into fresh pages vs 0.03 s into warm ones on this host class;
 # in-worker kernel walls read 0.8-10.8 s for the same data purely on
 # allocation weather).  Python workers are reused across tasks, so a
-# module-level buffer keyed by shape keeps the pages warm for the
-# whole session.  Bounded: <= chunk(2048) x M(<=4096) doubles = 67 MB
-# per worker that ever ran an ann task.
+# module-level buffer keeps the pages warm for the whole session.
+# One buffer per worker, keyed by M and replaced when M changes (M
+# follows the catalog size, so a worker serving several fixtures
+# would otherwise keep one per M).  Bounded: <= chunk(2048) x
+# M(<=4096) doubles = 67 MB per worker that ever ran an ann task.
+_ANN_CHUNK = 2048
 _ANN_SCRATCH: dict = {}
+
+
+def _score_chunk(U, Ct):
+    """``U @ Ct`` (b x M, b <= _ANN_CHUNK) written into the worker's
+    scratch buffer; the result is a view that the next call reuses."""
+    import numpy as np
+
+    m = Ct.shape[1]
+    buf = _ANN_SCRATCH.get(m)
+    if buf is None:
+        _ANN_SCRATCH.clear()
+        buf = _ANN_SCRATCH[m] = np.empty((_ANN_CHUNK, m))
+    return np.matmul(U, Ct, out=buf[: len(U)])
 
 
 def _top3_stable(S):
@@ -302,18 +318,12 @@ def q_als_recommend_ann(spark: SparkSession, sf_dir: str) -> DataFrame:
     ids = np.array([r["item_id"] for r in cand], dtype=np.int64)
 
     def _score(batches):
-        # score-matrix scratch: allocate once per (worker, M), slice
-        # for partial chunks — see _ANN_SCRATCH above
         Ct = C.T
         for pdf in batches:
-            for lo in range(0, len(pdf), 2048):  # bound S to ~40 MB
-                chunk = pdf.iloc[lo : lo + 2048]
+            for lo in range(0, len(pdf), _ANN_CHUNK):  # bound S to ~40 MB
+                chunk = pdf.iloc[lo : lo + _ANN_CHUNK]
                 U = np.stack(chunk["ufeat"].to_numpy())  # b x rank
-                buf = _ANN_SCRATCH.get(len(ids))
-                if buf is None:
-                    buf = np.empty((2048, len(ids)))
-                    _ANN_SCRATCH[len(ids)] = buf
-                S = np.matmul(U, Ct, out=buf[: len(chunk)])  # b x M
+                S = _score_chunk(U, Ct)  # b x M, in the worker's scratch
                 top = _top3_stable(S)
                 rows = np.arange(len(chunk))
                 s_top = S[rows[:, None], top]  # b x 3

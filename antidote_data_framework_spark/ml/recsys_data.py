@@ -25,6 +25,8 @@ from ..functions.hints import broadcast_small as bcast
 from ..sources import load_table
 
 # Shared oracle CTE: the ratings view in ANSI SQL (DuckDB-runnable).
+# Its `l.l_partkey AS item_id` mirrors ratings_df, where item_id must
+# stay raw l_partkey for neighbors_cf._pair_key_packable (see there).
 RATINGS_CTE = """
 ratings AS (
   SELECT o.o_custkey                              AS user_id,
@@ -63,6 +65,9 @@ def ratings_df(spark: SparkSession, sf_dir: str) -> DataFrame:
     orders = load_table(spark, sf_dir, "orders")
     return li.join(orders, li.l_orderkey == orders.o_orderkey).select(
         F.col("o_custkey").alias("user_id"),
+        # item_id must stay raw l_partkey: neighbors_cf._pair_key_packable
+        # bounds l_partkey to decide whether item pairs pack into one long
+        # (tests/test_pair_pack.py pins min/max equality at sf0.01).
         F.col("l_partkey").alias("item_id"),
         (1 + F.col("l_quantity").cast("int") % 5).alias("rating"),
     )

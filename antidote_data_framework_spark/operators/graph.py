@@ -153,7 +153,13 @@ def _build_pair_counts(li: DataFrame) -> DataFrame:
     row_number sort spills gracefully and hands the SAME survivor set
     (first-CAP by (l_linenumber, l_partkey)) to an aggregation whose
     per-key buffer is then provably <= CAP structs.  Both paths emit
-    the identical pair multiset (test-pinned past CAP x 6)."""
+    the identical pair multiset (test-pinned past CAP x 6).
+
+    Construction is NOT lazy: the bounds probe (max lines per order and
+    the l_partkey range for the pair pack) runs as an eager ``.first()``
+    job when this function is called, before the caller asks for any
+    action (``_pair_counts`` memoizes the result, so a bench sweep pays
+    it once; an explain-only consumer pays it too)."""
     bounds = (
         li.groupBy("l_orderkey")
         .agg(

@@ -19,6 +19,30 @@ Local-mode defaults that still encode the cluster posture:
   made 11,939 driver->JVM py4j calls with it on and 3,558 with it off.
   What is lost is the Python file:line in DataFrame error contexts,
   which no query or test reads.
+- Driver JIT compiler pool capped at 2 threads (``-XX:CICompilerCount=2``,
+  a constant): 1 C1 + 1 C2, the floor HotSpot allows with tiered
+  compilation.  A session here is short and cold, and over one
+  perfbench ``recsys`` run on 4 vCPU HotSpot's default pool (1 C1 +
+  2 C2) spent 47.6 s of the JVM's 97.6 s CPU in C2 (task threads
+  11.7 s), contending with the driver and the task slots for the same
+  cores.  With one C2 thread every hot method is still compiled at full
+  quality, one at a time, and the tiered policy drops stale queued
+  methods instead of compiling them.  Medians of 10 runs each way:
+  C2 CPU 47.6 -> 29.9 s and pass ``cpu_s`` 75.0 -> 61.4 s on
+  ``recsys``, 42.1 -> 26.7 s and 69.9 -> 55.8 s on ``pipeline``; task
+  thread CPU rises (11.7 -> 14.2 s on ``recsys``) as hot code waits
+  longer for C2.  The cost is in long, diverse sessions, where code
+  generated for hundreds of distinct queries keeps the single C2
+  thread busy: on 4 cores one full ``bench.py`` sweep at sf0.01 and
+  the test suite ran ~6-11% longer (CHANGES.md).  The flag goes through
+  ``spark.driver.defaultJavaOptions``, which spark-submit prepends to
+  the user's options; ``extraJavaOptions`` is silently replaced by
+  ``--driver-java-options`` (perfbench passes it), so the flag would
+  vanish there.  Rejected after measuring: ``-XX:TieredStopAtLevel=1``
+  (C1 only; larger frames overflow the stack inside an ALS task),
+  tier-4 thresholds raised 3x (``recsys`` ``cpu_s`` only -10.8%), and
+  the cap plus raised thresholds (~2 s more on ``pipeline`` for four
+  more flags).
 """
 
 from __future__ import annotations
@@ -68,6 +92,9 @@ def get_spark(app_name: str = "antidote_data_framework_spark") -> SparkSession:
         # Column calls skip the call-site capture (module docstring).
         .config("spark.python.sql.dataFrameDebugging.enabled", "false")
         .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "16g"))
+        # JIT compiler pool cap (module docstring); defaultJavaOptions
+        # survives --driver-java-options, extraJavaOptions does not.
+        .config("spark.driver.defaultJavaOptions", "-XX:CICompilerCount=2")
         # Row-proportional demo results (per-row projections like
         # q_scalar_math_cond) exceed the 1g default when collected at
         # the synthetic 27x scale point (16.2M rows x 15 cols); 4g is

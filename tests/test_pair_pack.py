@@ -10,6 +10,8 @@ classic path.
 
 from __future__ import annotations
 
+import os
+
 from pyspark.sql import functions as F
 
 from antidote_data_framework_spark.ml.neighbors_cf import (
@@ -88,3 +90,21 @@ def test_packable_guard_reads_the_fixture(spark, sf_dir):
     neighbors_cf._PACKABLE_CACHE.clear()
     assert _pair_key_packable(spark, sf_dir) is True  # fixture partkeys are small
     neighbors_cf._PACKABLE_CACHE.clear()
+
+
+def test_pack_guard_bounds_match_ratings_item_ids(spark, sf_dir):
+    """_pair_key_packable bounds lineitem.l_partkey, but the pack acts
+    on the derived ratings/cells ``item_id``; the guard is only sound
+    while ratings_df keeps item_id = l_partkey verbatim."""
+    from antidote_data_framework_spark.ml.recsys_data import ratings_df
+    from antidote_data_framework_spark.sources import load_table
+
+    sf01 = os.path.join(os.path.dirname(sf_dir), "sf0.01")
+    items = ratings_df(spark, sf01).agg(
+        F.min("item_id").alias("lo"), F.max("item_id").alias("hi")
+    ).first()
+    parts = load_table(spark, sf01, "lineitem").agg(
+        F.min("l_partkey").alias("lo"), F.max("l_partkey").alias("hi")
+    ).first()
+    assert items["lo"] is not None
+    assert (items["lo"], items["hi"]) == (parts["lo"], parts["hi"])
