@@ -203,25 +203,24 @@ def q_als_recommend_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
 # in-worker kernel walls read 0.8-10.8 s for the same data purely on
 # allocation weather).  Python workers are reused across tasks, so a
 # module-level buffer keeps the pages warm for the whole session.
-# One buffer per worker, keyed by M and replaced when M changes (M
-# follows the catalog size, so a worker serving several fixtures
-# would otherwise keep one per M).  Bounded: <= chunk(2048) x
-# M(<=4096) doubles = 67 MB per worker that ever ran an ann task.
+# One buffer per worker, replaced when M changes (M follows the
+# catalog size, so a worker serving several fixtures would otherwise
+# keep one per M).  Bounded: <= chunk(2048) x M(<=4096) doubles =
+# 67 MB per worker that ever ran an ann task.
 _ANN_CHUNK = 2048
-_ANN_SCRATCH: dict = {}
+_ANN_SCRATCH = None  # this worker's _ANN_CHUNK x M buffer, or None
 
 
 def _score_chunk(U, Ct):
     """``U @ Ct`` (b x M, b <= _ANN_CHUNK) written into the worker's
     scratch buffer; the result is a view that the next call reuses."""
+    global _ANN_SCRATCH
     import numpy as np
 
     m = Ct.shape[1]
-    buf = _ANN_SCRATCH.get(m)
-    if buf is None:
-        _ANN_SCRATCH.clear()
-        buf = _ANN_SCRATCH[m] = np.empty((_ANN_CHUNK, m))
-    return np.matmul(U, Ct, out=buf[: len(U)])
+    if _ANN_SCRATCH is None or _ANN_SCRATCH.shape[1] != m:
+        _ANN_SCRATCH = np.empty((_ANN_CHUNK, m))
+    return np.matmul(U, Ct, out=_ANN_SCRATCH[: len(U)])
 
 
 def _top3_stable(S):

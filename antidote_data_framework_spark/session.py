@@ -19,30 +19,36 @@ Local-mode defaults that still encode the cluster posture:
   made 11,939 driver->JVM py4j calls with it on and 3,558 with it off.
   What is lost is the Python file:line in DataFrame error contexts,
   which no query or test reads.
-- Driver JIT compiler pool capped at 2 threads (``-XX:CICompilerCount=2``,
-  a constant): 1 C1 + 1 C2, the floor HotSpot allows with tiered
-  compilation.  A session here is short and cold, and over one
-  perfbench ``recsys`` run on 4 vCPU HotSpot's default pool (1 C1 +
-  2 C2) spent 47.6 s of the JVM's 97.6 s CPU in C2 (task threads
-  11.7 s), contending with the driver and the task slots for the same
-  cores.  With one C2 thread every hot method is still compiled at full
-  quality, one at a time, and the tiered policy drops stale queued
-  methods instead of compiling them.  Medians of 10 runs each way:
-  C2 CPU 47.6 -> 29.9 s and pass ``cpu_s`` 75.0 -> 61.4 s on
-  ``recsys``, 42.1 -> 26.7 s and 69.9 -> 55.8 s on ``pipeline``; task
-  thread CPU rises (11.7 -> 14.2 s on ``recsys``) as hot code waits
-  longer for C2.  The cost is in long, diverse sessions, where code
-  generated for hundreds of distinct queries keeps the single C2
-  thread busy: on 4 cores one full ``bench.py`` sweep at sf0.01 and
-  the test suite ran ~6-11% longer (CHANGES.md).  The flag goes through
+- Driver JIT compiler pool capped at 2 threads (``-XX:CICompilerCount=2``:
+  1 C1 + 1 C2, the floor HotSpot allows with tiered compilation) on
+  hosts whose driver sees at most 4 cores, the only size it was
+  measured at.  There HotSpot's default pool is 1 C1 + 2 C2 (already
+  1 + 1 below 4 cores).  At 8 cores it is 4 threads and at 32 cores
+  15, so the cap would remove far more than one C2 thread, unmeasured;
+  larger hosts keep HotSpot's pool.  The rule reads the core affinity,
+  not ``SPARK_GRAFT_CPUS``, and has no override.  On 4 vCPU a cold
+  perfbench ``recsys`` pass with the default pool spent 47.6 s of the
+  JVM's 97.6 s CPU in C2.  With one C2 thread every hot method is
+  still compiled at full quality, hottest first, and queued methods
+  that went cold are dropped instead of compiled.  Medians of 10 runs
+  each way: C2 CPU 47.6 -> 29.9 s and ``cpu_s`` 75.0 -> 61.4 s on
+  ``recsys``, 42.1 -> 26.7 s and 69.9 -> 55.8 s on ``pipeline``;
+  ``wall_s`` flat to lower; task-thread CPU rises (11.7 -> 14.2 s) as
+  hot code waits longer for C2.  Long sessions of many distinct
+  queries can pay in wall time: on a loaded 4-core host a full
+  306-query ``bench.py`` sweep at sf0.01 took 307.5 -> 324.8 s (+5.6%,
+  medians of 5 alternating pairs, slower in all 5), mostly in the
+  first fifth of the sweep.  On the same host idle, 3 pairs read
+  130.0 -> 127.9 s (CHANGES.md).  The flag goes through
   ``spark.driver.defaultJavaOptions``, which spark-submit prepends to
   the user's options; ``extraJavaOptions`` is silently replaced by
   ``--driver-java-options`` (perfbench passes it), so the flag would
   vanish there.  Rejected after measuring: ``-XX:TieredStopAtLevel=1``
   (C1 only; larger frames overflow the stack inside an ALS task),
-  tier-4 thresholds raised 3x (``recsys`` ``cpu_s`` only -10.8%), and
-  the cap plus raised thresholds (~2 s more on ``pipeline`` for four
-  more flags).
+  tier-4 thresholds raised 3x (``recsys`` ``cpu_s`` only -10.8%), the
+  cap plus raised thresholds (~2 s more on ``pipeline`` for four more
+  flags), and ``-XX:Tier4LoadFeedback=1`` with the default pool (C2
+  CPU 44 s against 45 s).
 """
 
 from __future__ import annotations
@@ -50,6 +56,16 @@ from __future__ import annotations
 import os
 
 from pyspark.sql import SparkSession
+
+
+# Largest core count at which the driver's JIT pool is capped, the
+# only size it was measured at (module docstring).
+_JIT_CAP_MAX_CORES = 4
+
+
+def _driver_jit_options(cores: int) -> str:
+    """Driver JVM JIT flags for a host whose driver sees ``cores``."""
+    return "-XX:CICompilerCount=2" if cores <= _JIT_CAP_MAX_CORES else ""
 
 
 def get_spark(app_name: str = "antidote_data_framework_spark") -> SparkSession:
@@ -92,9 +108,6 @@ def get_spark(app_name: str = "antidote_data_framework_spark") -> SparkSession:
         # Column calls skip the call-site capture (module docstring).
         .config("spark.python.sql.dataFrameDebugging.enabled", "false")
         .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "16g"))
-        # JIT compiler pool cap (module docstring); defaultJavaOptions
-        # survives --driver-java-options, extraJavaOptions does not.
-        .config("spark.driver.defaultJavaOptions", "-XX:CICompilerCount=2")
         # Row-proportional demo results (per-row projections like
         # q_scalar_math_cond) exceed the 1g default when collected at
         # the synthetic 27x scale point (16.2M rows x 15 cols); 4g is
@@ -131,6 +144,11 @@ def get_spark(app_name: str = "antidote_data_framework_spark") -> SparkSession:
         # reader rejects; read as epoch-nanos long, converted in the loader.
         .config("spark.sql.legacy.parquet.nanosAsLong", "true")
     )
+    jit = _driver_jit_options(len(os.sched_getaffinity(0)))
+    if jit:
+        # defaultJavaOptions survives --driver-java-options,
+        # extraJavaOptions does not (module docstring).
+        builder = builder.config("spark.driver.defaultJavaOptions", jit)
     spark = builder.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     return spark

@@ -10,11 +10,9 @@ BENCH_r01.json recorded ``"parsed": null``):
 - stdout last line: a COMPACT headline (metric/value/unit/sf +
   queries_file pointer) that stays complete even when only the tail
   of stdout is captured.
-- the full per-query stats (median/min/all runs, plus ``jit_ms``: the
-  driver JVM's JIT compilation ms over that query's timed runs, an
-  approximate figure because compilation runs in the background) are
-  written to ``bench_queries.json`` next to this script (and echoed
-  per-run on stderr as it runs).
+- the full per-query stats (median/min/all runs) are written to
+  ``bench_queries.json`` next to this script (and echoed per-run on
+  stderr as it runs).
 
 Timing methodology (r2+r3 ADVICE, fixed for good this round):
 
@@ -219,12 +217,6 @@ def _run_once(spark, sf_dir: str, fn) -> float:
     return time.time() - t0
 
 
-def _jit_ms(spark) -> int:
-    """The driver JVM's total JIT compilation time so far, in ms."""
-    mf = spark._jvm.java.lang.management.ManagementFactory
-    return int(mf.getCompilationMXBean().getTotalCompilationTime())
-
-
 def main() -> None:
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     n_sweeps = max(1, int(os.environ.get("SPARK_GRAFT_BENCH_RUNS", "3")))
@@ -256,24 +248,14 @@ def main() -> None:
     mid_name = qnames[max(0, len(qnames) // 2 - 1)] if replicas else None
     runs: dict[str, list[float]] = {name: [] for name in qs}
     runs.update({rk: [] for rk in replicas})
-    jit = {name: 0 for name in runs}
-
-    def _timed(name: str, fn) -> float:
-        # JIT ms read around each timed run.  Approximate: the compiler
-        # threads work in the background, so a method queued during one
-        # query may be compiled (and charged) while the next one runs.
-        j0 = _jit_ms(spark)
-        sec = _run_once(spark, sf_dir, fn)
-        jit[name] += _jit_ms(spark) - j0
-        runs[name].append(sec)
-        return sec
 
     def _time_replicas(sweep: int, pos: str) -> None:
         for rk, cls in replicas.items():
             if not rk.endswith(f"_{pos}"):
                 continue
             try:
-                sec = _timed(rk, qs[CANARIES[cls]])
+                sec = _run_once(spark, sf_dir, qs[CANARIES[cls]])
+                runs[rk].append(sec)
                 print(
                     f"bench[{sweep + 1}/{n_sweeps}]: {rk} {sec:.2f}s",
                     file=sys.stderr,
@@ -297,7 +279,8 @@ def main() -> None:
         clear_derived_caches(spark)
         for name, fn in qs.items():
             try:
-                sec = _timed(name, fn)
+                sec = _run_once(spark, sf_dir, fn)
+                runs[name].append(sec)
                 print(f"bench[{sweep + 1}/{n_sweeps}]: {name} {sec:.2f}s", file=sys.stderr)
             except Exception as exc:  # a failing query must not kill the bench
                 print(f"bench[{sweep + 1}/{n_sweeps}]: {name} failed: {exc}", file=sys.stderr)
@@ -316,13 +299,10 @@ def main() -> None:
                 "min": round(min(rs), 3),
                 "n_runs": len(rs),
                 "runs": [round(r, 3) for r in rs],
-                "jit_ms": jit[name],
             }
         else:
             times[name] = -1.0
-            stats[name] = {
-                "median": -1.0, "min": -1.0, "n_runs": 0, "runs": [], "jit_ms": 0
-            }
+            stats[name] = {"median": -1.0, "min": -1.0, "n_runs": 0, "runs": []}
 
     total = round(
         sum(

@@ -77,12 +77,3 @@ def test_class_ratio_points_and_nearest_position():
     pts2 = _class_ratio_points("shuffle", qnames, lambda k: None)
     assert pts2 == []
     assert _nearest_ratio(pts2, 50) == 1.0  # no points -> no adjustment
-
-
-def test_jit_ms_reads_the_driver_compilation_clock(spark):
-    from bench import _jit_ms
-
-    a = _jit_ms(spark)
-    spark.range(1000).selectExpr("sum(id * 3)").collect()
-    b = _jit_ms(spark)
-    assert isinstance(a, int) and 0 <= a <= b
